@@ -1710,8 +1710,9 @@ def q_q21_suppliers_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
     CASE) the sole late supplier key when that count is exactly 1 —
     followed by a filter ``n_supp > 1 AND n_late = 1``. One shuffle
     on the order key replaces two correlated subqueries; the blamed-
-    supplier rollup then counts orders per supplier (all-BIGINT) and
-    top-20s with full tie-break determinism.
+    supplier rollup joins ``supplier`` and counts orders per
+    ``s_name`` (all-BIGINT), as Q21 does — names need not be unique
+    per key — and top-20s with full tie-break determinism.
     """
     orders = read_table(spark, sf_dir, "orders").filter(
         F.col("o_orderstatus") == "F"
@@ -1754,10 +1755,9 @@ def q_q21_suppliers_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("n_supp") > 1) & (F.col("n_late") == 1)
     )
     return (
-        blamed.groupBy("late_supp")
+        blamed.join(supp, F.col("late_supp") == supp.s_suppkey)
+        .groupBy("s_name")
         .agg(F.count("*").alias("numwait"))
-        .join(supp, F.col("late_supp") == supp.s_suppkey)
-        .select("s_name", "numwait")
         .orderBy(F.desc("numwait"), "s_name")
         .limit(20)
     )

@@ -1134,27 +1134,28 @@ def q_graph_label_propagation(
     return label_propagation(edges.select("src_id", "n_id"))
 
 
-#: k-core threshold and fixed peel-round budget, over the MUTUAL kNN
-#: graph (x and y connected only when each is in the other's top-k —
-#: the standard symmetrization for clustering, and the only one that
+#: k-core threshold and peel-round budget, over the MUTUAL kNN graph
+#: (x and y connected only when each is in the other's top-k — the
+#: standard symmetrization for clustering, and the only one that
 #: yields a non-trivial core here: the plain undirected kNN graph has
 #: degree ≥ k at EVERY vertex by construction, so its k-core is all
 #: or nothing). Mutual degrees run 1-5 on the fixture; k=3 peels
 #: ~1/5 of the graph through a real multi-round cascade (measured
 #: waves at sf0.1: 270/105/45/18/7/4/2/1/2/1, fixed point at round
 #: 11) and keeps a substantial core. ROUNDS bounds the depth the way
-#: CC_MAX_ROUNDS bounds connected_components: the Spark loop BREAKS
-#: at the first zero-peel round (the driver holds only a counter),
-#: and the twin's extra unrolled rounds past the fixed point are
-#: exact no-ops, so any budget >= the true depth gives identical
-#: results. Fixed point within budget is asserted in tests.
+#: CC_MAX_ROUNDS bounds connected_components: the Spark loop stops at
+#: the fixed point (the driver holds only the observed peel counter),
+#: and the twin's extra unrolled rounds past the fixed point are exact
+#: no-ops, so any budget >= the true depth gives identical results.
+#: A budget cut short leaves the survivors "in core" at their degree
+#: among the survivors. Fixed point within budget is asserted in tests.
 KCORE_K = 3
 KCORE_ROUNDS = 16
 
 
 def kcore(edges: DataFrame, k: int = KCORE_K, rounds: int = KCORE_ROUNDS) -> DataFrame:
-    """Fixed-round k-core decomposition of a directed edge list taken
-    as undirected — the graph-curation density gate: the k-core is the
+    """Peeling k-core decomposition of a directed edge list taken as
+    undirected — the graph-curation density gate: the k-core is the
     maximal subgraph where every vertex keeps ≥ k neighbors, the
     standard definition of a "dense community" on near-dup/retrieval
     graphs (template families and boilerplate farms sit in deep
@@ -1163,97 +1164,98 @@ def kcore(edges: DataFrame, k: int = KCORE_K, rounds: int = KCORE_ROUNDS) -> Dat
     degree is below k — removing a vertex lowers its neighbors'
     degrees, so the cascade must recompute degrees per round.
 
-    Fixed ``rounds`` unrolled into one lazy plan (the PageRank/kmeans
-    convention — convergence-loop use materializes per round with
-    localCheckpoint exactly as ``connected_components`` does). Per
-    round: one partial-aggregated degree count (shuffle carries
-    vertex cardinality), two LEFT SEMI joins restricting the edge set
-    to survivors. Output: every original vertex with its initial
-    degree, the peel round that removed it (NULL if it survived all
-    rounds = in-core at the measured depth), the in-core verdict, and
-    the core-subgraph degree for survivors.
+    Vertex-state recurrence (Pregel-style): one row per vertex holds
+    its neighbor list, initial degree, current degree (neighbors
+    still standing) and peel round (NULL while standing). A round is
+    ONE shuffle: every standing vertex below k takes the round's
+    stamp, then a single explode sends each vertex's row to itself
+    and, from each vertex still standing, one message to each
+    neighbor; ``groupBy(v)`` folds them into the next state, the new
+    current degree being the neighbor-message count. The self-message
+    keeps a vertex whose neighbors all peeled in the state at degree
+    zero, so the next round peels it instead of losing it.
+
+    Each round is ONE action: the round's eager ``localCheckpoint``
+    (which keeps the plan flat — each round reads only the previous
+    checkpoint) carries an ``Observation`` counting the standing
+    vertices now below k, i.e. the next round's peel count. Zero
+    means the fixed point: the loop stops there instead of running
+    the no-op round. Every state row already carries the degree among
+    the survivors, so a budget that ends before the fixed point needs
+    no extra degree pass. Output: every original vertex with its
+    initial degree, the peel round that removed it (NULL if it
+    survived all rounds = in-core at the measured depth), the in-core
+    verdict, and the core-subgraph degree for survivors.
     """
-    from covid_engineering_spark.functions import evicting_cache
+    from pyspark.sql import Observation
 
-    und0 = evicting_cache(
-        edges.select(
-            F.least("src_id", "n_id").alias("a"),
-            F.greatest("src_id", "n_id").alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct(),
-        "kcore_edges",
-    )
-
-    def degrees(und):
-        return (
-            und.select(F.col("a").alias("v"))
-            .unionAll(und.select(F.col("b").alias("v")))
-            .groupBy("v")
-            .agg(F.count("*").alias("deg"))
-        )
-
-    deg0 = evicting_cache(degrees(und0), "kcore_deg0")
-
-    def zero_filled(verts, und):
-        """Current degree of every still-standing vertex — explicitly
-        ZERO-filled: a vertex isolated by its neighbors' removal has
-        no edge left and would silently vanish from a bare degree
-        aggregate, escaping both the peel and the core."""
-        return verts.join(degrees(und), "v", "left").select(
-            "v",
-            F.coalesce(F.col("deg"), F.lit(0).cast("long")).alias(
-                "deg"
-            ),
-        )
-
-    und = und0
-    verts = deg0.select("v")
-    peeled = None  # (v, peel_round) accumulator
-    for r in range(1, rounds + 1):
-        # eager localCheckpoint per round (the connected_components
-        # convention): each round's edge set references the previous
-        # round's ~3 times (two degree branches + the restriction),
-        # so the UNCHECKPOINTED unrolled tree grows ~3^rounds and
-        # Catalyst's tree-walking analysis blows the driver heap at 4
-        # rounds; truncation keeps every round's plan flat.
-        degc = zero_filled(verts, und).localCheckpoint(eager=True)
-        drop = degc.filter(F.col("deg") < k).select(
-            "v", F.lit(r).alias("peel_round")
-        )
-        # convergence break on the checkpointed round frame — the
-        # driver-side loop holds only this counter, never data; the
-        # twin's rounds past the fixed point are exact no-ops, so the
-        # early exit cannot diverge from the unrolled SQL. (On a
-        # round-1 break — e.g. an empty or all-core graph — `peeled`
-        # stays an empty typed frame, set below, never None.)
-        if peeled is None:
-            peeled = drop.filter(F.lit(False))
-        if drop.count() == 0:
-            break
-        peeled = peeled.unionByName(drop)
-        verts = degc.filter(F.col("deg") >= k).select("v")
-        und = (
-            und.join(
-                verts.select(F.col("v").alias("a")), "a", "left_semi"
+    pair = edges.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("src_id").alias("v"), F.col("n_id").alias("n")),
+                F.struct(F.col("n_id").alias("v"), F.col("src_id").alias("n")),
             )
-            .join(verts.select(F.col("v").alias("b")), "b", "left_semi")
-            .localCheckpoint(eager=True)
-        )
-    core = zero_filled(verts, und).select(
-        "v", F.col("deg").alias("core_degree")
-    )
-    return (
-        deg0.select("v", F.col("deg").alias("initial_degree"))
-        .join(peeled, "v", "left")
-        .join(core, "v", "left")
+        ).alias("e")
+    ).select("e.*")
+    deg0 = F.size("nbrs").cast("long")
+    state = (
+        pair.filter(F.col("v") != F.col("n"))
+        .groupBy("v")
+        .agg(F.collect_set("n").alias("nbrs"))
         .select(
-            F.col("v").alias("vec_id"),
-            "initial_degree",
-            F.col("peel_round").cast("int").alias("peel_round"),
-            F.col("core_degree").isNotNull().alias("in_core"),
-            "core_degree",
+            "v",
+            "nbrs",
+            deg0.alias("initial_degree"),
+            deg0.alias("deg"),
+            F.lit(None).cast("int").alias("peel_round"),
         )
+    )
+    row = F.struct("nbrs", "initial_degree", "peel_round")
+    no_row = F.lit(None).cast(state.select(row).schema[0].dataType)
+    no_nbrs = F.array().cast(state.schema["nbrs"].dataType)
+    standing = F.col("peel_round").isNull()
+    for r in range(1, rounds + 1):
+        stamped = state.select(
+            "v",
+            "nbrs",
+            "initial_degree",
+            F.when(standing & (F.col("deg") < k), F.lit(r))
+            .otherwise(F.col("peel_round"))
+            .alias("peel_round"),
+        )
+        sent = F.when(standing, F.col("nbrs")).otherwise(no_nbrs)
+        msgs = stamped.select(
+            F.explode(
+                F.concat(
+                    F.array(F.struct("v", row.alias("row"))),
+                    F.transform(
+                        sent,
+                        lambda n: F.struct(n.alias("v"), no_row.alias("row")),
+                    ),
+                )
+            ).alias("m")
+        ).select("m.*")
+        # the vertex's own row is its group's one non-NULL row; every
+        # other message comes from a standing neighbor
+        folded = msgs.groupBy("v").agg(
+            F.first("row", ignorenulls=True).alias("row"),
+            (F.count("*") - 1).alias("deg"),
+        )
+        state = folded.select(
+            "v", "row.nbrs", "row.initial_degree", "deg", "row.peel_round"
+        )
+        below = Observation()
+        state = state.observe(
+            below, F.count(F.when(standing & (F.col("deg") < k), 1)).alias("n")
+        ).localCheckpoint(eager=True)
+        if below.get["n"] == 0:
+            break
+    return state.select(
+        F.col("v").alias("vec_id"),
+        "initial_degree",
+        "peel_round",
+        standing.alias("in_core"),
+        F.when(standing, F.col("deg")).alias("core_degree"),
     )
 
 
@@ -3280,7 +3282,10 @@ def _kcore_oracle_sql(
     """Twin of ``kcore`` over the kNN edges: the identical edge CTE,
     then every unrolled peel round — zero-filled degree recount,
     sub-k drop with its round stamp, survivor semi-restriction of the
-    edge set — and the survivor/peeled assembly."""
+    edge set — and the survivor/peeled assembly. It replays the peel
+    as edge-set restriction, not as ``kcore``'s vertex-state
+    messages; both give every vertex's degree among the survivors of
+    each round, so their outputs agree row for row."""
 
     def deg_of(u: str) -> str:
         return (
@@ -3292,8 +3297,9 @@ def _kcore_oracle_sql(
     # AS MATERIALIZED on every per-round frame: each round references
     # the previous round's edge set ~3 times (two degree branches +
     # the restriction), and DuckDB's default CTE inlining re-executes
-    # the whole upstream kNN self-join per reference — the same
-    # ~3^rounds blowup the Spark side truncates with localCheckpoint.
+    # the whole upstream kNN self-join per reference, a ~3^rounds
+    # blowup. (The Spark side has no such fan-out: each round reads
+    # only the previous round's vertex state, once.)
     blocks = []
     prev_v, prev_u = "v0", "und"
     for r in range(1, rounds + 1):

@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """One-off stage profile of pipe_curate_corpus' honest (cold-cache)
 build: times each constituent frame to a noop sink with caches reset
-first, so the 11s build seen in bench_breakdown is attributed to a
+first, so the 11s build seen in the per-query breakdown is attributed to a
 stage. Diagnostic only (r12)."""
 
 from __future__ import annotations

@@ -212,3 +212,41 @@ def test_global_prefix_sum_matches_python_fold_on_random_frames(
     for i, _, w in sorted(rows, key=lambda r: (r[1], r[0])):
         run += w
         assert got[i] == (run, total), (i, got[i], run, total)
+
+
+def test_q21_groups_by_supplier_name(spark, tmp_path):
+    """Q21 counts waiting orders per ``s_name``: when several supplier
+    keys share a name (the key-shifted blowups copy names), their
+    counts merge into one row, exactly as in the DuckDB twin."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from covid_engineering_spark.queries import oracles, registry
+
+    from tests.oracle_check import compare, duck_con
+
+    shutil.copytree(SF_SMOKE, tmp_path, dirs_exist_ok=True)
+    path = str(tmp_path / "supplier.parquet")
+    supp = pq.read_table(path)
+    names = pc.binary_join_element_wise(
+        "Supplier#",
+        pc.cast(pc.bit_wise_and(supp["s_suppkey"], 3), pa.string()),
+        "",
+    )
+    pq.write_table(
+        supp.set_column(supp.schema.get_field_index("s_name"), "s_name", names),
+        path,
+    )
+    con = duck_con(str(tmp_path))
+    try:
+        res = compare(
+            registry()["q21_suppliers_waiting"](spark, str(tmp_path)),
+            con,
+            oracles()["q21_suppliers_waiting"],
+        )
+        assert res["match"], res
+    finally:
+        con.close()

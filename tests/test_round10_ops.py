@@ -1358,15 +1358,7 @@ def test_kcore_matches_twin_on_null_payloads(spark, patho_dir):  # noqa: F811
         con.close()
 
 
-def test_kcore_hand_graph(spark):
-    """Peel semantics pinned by hand on K5 + appendages, k=3: the
-    5-clique (degree 4 each) survives untouched; a tail vertex whose
-    degree starts ABOVE k peels only in round 2 after round 1 removes
-    its leaves (the cascade a one-shot degree filter misses); and a
-    hub isolated by its neighbors' removal is peeled the NEXT round
-    at degree zero, not lost (the zero-fill contract)."""
-    from covid_engineering_spark.operators.similarity import kcore
-
+def _hand_kcore_edges(spark):
     k5 = [
         (a, b) for a in (1, 2, 3, 4, 5) for b in (1, 2, 3, 4, 5) if a < b
     ]
@@ -1377,11 +1369,21 @@ def test_kcore_hand_graph(spark):
     # star: 8 connected to three degree-1 leaves — every leaf peels in
     # round 1, so 8 (initial degree 3 >= k) is ISOLATED by round 2
     star = [(8, 9), (8, 10), (8, 11)]
-    edges = spark.createDataFrame(
-        k5 + tail + star, "src_id long, n_id long"
-    )
+    return spark.createDataFrame(k5 + tail + star, "src_id long, n_id long")
+
+
+def test_kcore_hand_graph(spark):
+    """Peel semantics pinned by hand on K5 + appendages, k=3: the
+    5-clique (degree 4 each) survives untouched; a tail vertex whose
+    degree starts ABOVE k peels only in round 2 after round 1 removes
+    its leaves (the cascade a one-shot degree filter misses); and a
+    hub isolated by its neighbors' removal is peeled the NEXT round
+    at degree zero, not lost (its self-message keeps it in the
+    vertex state)."""
+    from covid_engineering_spark.operators.similarity import kcore
+
     got = {
-        r["vec_id"]: r for r in kcore(edges, k=3).collect()
+        r["vec_id"]: r for r in kcore(_hand_kcore_edges(spark), k=3).collect()
     }
     for v in (1, 2, 3, 4):
         assert got[v]["in_core"] and got[v]["peel_round"] is None
@@ -1392,6 +1394,54 @@ def test_kcore_hand_graph(spark):
     assert got[6]["peel_round"] == 2  # survived round 1 at degree 3
     assert got[8]["peel_round"] == 2  # isolated, then peeled (deg 0)
     assert not got[8]["in_core"]
+
+
+def test_kcore_budget_cut_keeps_survivor_degrees(spark):
+    """A budget that ends before the fixed point leaves the survivors
+    in core at their degree AMONG THE SURVIVORS (the final degree
+    pass), not at the degree that let them survive the last round:
+    after one round 6 has lost both leaves (degree 1) and 8 all three
+    (degree 0) while 5 still counts 6; a second round peels 6 and 8
+    and 5 drops to the clique's 4."""
+    from covid_engineering_spark.operators.similarity import kcore
+
+    edges = _hand_kcore_edges(spark)
+    one = {r["vec_id"]: r for r in kcore(edges, k=3, rounds=1).collect()}
+    for v, deg in ((5, 5), (6, 1), (8, 0)):
+        assert one[v]["in_core"] and one[v]["peel_round"] is None, v
+        assert one[v]["core_degree"] == deg, (v, one[v])
+    for leaf in (7, 12, 9, 10, 11):
+        assert one[leaf]["peel_round"] == 1, leaf
+        assert one[leaf]["core_degree"] is None, leaf
+    two = {r["vec_id"]: r for r in kcore(edges, k=3, rounds=2).collect()}
+    for v in (6, 8):
+        assert two[v]["peel_round"] == 2 and not two[v]["in_core"], v
+        assert two[v]["core_degree"] is None, v
+    assert two[5]["in_core"] and two[5]["core_degree"] == 4
+    # the fixed point is reached at round 2: larger budgets agree
+    three = {r["vec_id"]: r for r in kcore(edges, k=3, rounds=3).collect()}
+    assert three == two
+
+
+def test_kcore_job_count_bounded(spark):
+    """Each peel round is one shuffle and one action (the checkpoint
+    carries the convergence count), so the whole query launches a
+    few jobs per round: ~25 on the sf0.01 fixture, where a loop paying
+    ~9 jobs per round launches ~95."""
+    from conftest import SF_ORACLE
+
+    from covid_engineering_spark.queries import registry
+
+    sc = spark.sparkContext
+    group = "test-kcore-job-count"
+    sc.setJobGroup(group, "graph_kcore job count")
+    try:
+        df = registry()["graph_kcore"](spark, SF_ORACLE)
+        df.write.format("noop").mode("overwrite").save()
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 40, len(jobs)
 
 
 def test_kcore_reaches_fixed_point_on_the_fixture(spark):
